@@ -93,6 +93,32 @@ def peak_rss_mb(spark) -> float:
     return (py_kb + _hwm_kb(jvm_pid(spark))) / 1024.0
 
 
+def tree_cpu_s(root: int | None = None) -> float:
+    """CPU time (user + system, seconds) used so far by process `root`
+    (default: this one) and every live process below it: the Spark JVM and
+    the Python workers it forks."""
+    root = os.getpid() if root is None else root
+    children, ticks = {}, {}
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as f:
+                # the command name may hold spaces: fields follow its ")"
+                rest = f.read().rsplit(")", 1)[1].split()
+        except (OSError, IndexError):
+            continue
+        pid = int(name)
+        children.setdefault(int(rest[1]), []).append(pid)
+        ticks[pid] = int(rest[11]) + int(rest[12])
+    total, todo = 0, [root]
+    while todo:
+        pid = todo.pop()
+        total += ticks.get(pid, 0)
+        todo.extend(children.get(pid, ()))
+    return total / os.sysconf("SC_CLK_TCK")
+
+
 def median(xs) -> float | None:
     return statistics.median(xs) if xs else None
 

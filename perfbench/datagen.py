@@ -68,8 +68,13 @@ def _history(kind: str, rng, n: int, t_end: int) -> np.ndarray:
 
 def make_fleet(seed: int, n_streams: int, points: int, devices_per_site: int = 8):
     """`n_streams` streams of `points` points each, collections
-    ``site<k>/<device>`` with identity tags."""
-    rng = np.random.default_rng([seed, 0xF1EE7])
+    ``site<k>/<device>`` with identity tags.
+
+    The identities are the same for every seed: a fixed fleet of devices
+    whose readings (cadence jitter, gaps, values) the seed draws. The engine
+    shards streams by a hash of the uuid, so seeded uuids would change how
+    many shards a batch touches, and with it the work, from seed to seed."""
+    rng = np.random.default_rng(0xF1EE7)
     fleet = []
     for i in range(n_streams):
         srng = np.random.default_rng([seed, i])

@@ -81,7 +81,7 @@ def _state_metrics(wl) -> dict:
 
 def run(args) -> dict:
     import bench
-    from common import RunDir, log, median, peak_rss_mb, start_spark
+    from common import RunDir, log, median, peak_rss_mb, start_spark, tree_cpu_s
     from tracing import Tracer
     from workloads import WORKLOADS
 
@@ -105,15 +105,23 @@ def run(args) -> dict:
             log(f"setup {rep}: {reps[-1]:.2f}s")
             if rep < SETUP_REPS - 1:
                 wl.teardown()
+        t0 = time.perf_counter()
         wl.warmup()
+        log(f"warm-up: {time.perf_counter() - t0:.2f}s")
         cpu0 = bench._cpu_stat()
         gen0 = wl.engine_parts()[0]._read_manifest().get("gen_seq", 0)
+        tcpu0 = tree_cpu_s()
         wl.measure(args.seconds)
+        tcpu = tree_cpu_s() - tcpu0
         gen1 = wl.engine_parts()[0]._read_manifest().get("gen_seq", 0)
         steal = bench._steal_pct(cpu0, bench._cpu_stat())
+        t0 = time.perf_counter()
         wl.verify()
+        log(f"window: {wl.elapsed:.2f}s, verify: {time.perf_counter() - t0:.2f}s")
         detail = wl.detail()
         detail["setup_s"] = (spark_s + median(reps), "s")
+        done = len(wl.timed())
+        detail["cpu_ms_per_op"] = (1000 * tcpu / done if done else None, "ms")
         detail["error_ratio"] = (wl.failed / max(1, wl.attempted), "ratio")
         layer, selftime = {}, None
         if traced:

@@ -247,6 +247,16 @@ def _rows(ctype, raw, key="values") -> list[dict]:
     return [v for m in messages(ctype, raw) for v in m.get(key, [])]
 
 
+def _take(next_request, n: int):
+    """A request source that ends after `n` requests."""
+    left = iter(range(n))
+
+    def nxt(warm):
+        return None if next(left, None) is None else next_request(warm)
+
+    return nxt
+
+
 def _zipf(rng, n: int, s: float = 1.1) -> np.ndarray:
     """Popularity of n streams, Zipf-skewed over a seeded ranking."""
     w = 1.0 / np.arange(1, n + 1) ** s
@@ -263,11 +273,14 @@ class Dashboard(WireWorkload):
     classes = ("stat", "point", "meta")
     # every 20 requests of a client: 10 AlignedWindows, 3 Windows, 3 Nearest,
     # 2 short RawValues, 2 registry calls, interleaved in a fixed order that
-    # each client enters at a different offset; the seed picks streams,
-    # widths and times, so every run serves the same mix of request shapes
+    # each client enters at a different offset. Point widths, window widths
+    # and depths, slice lengths, directions and registry calls follow fixed
+    # rotations and the seed picks streams and times, so every run sends the
+    # same request shapes and its cost differs between seeds only by the data
     CYCLE = (
         "aw win aw near aw raw aw meta aw win aw near aw meta aw win aw near aw raw"
     ).split()
+    WARMUP = 3  # requests per client before the window
 
     def setup(self, rep: int) -> None:
         self._engine(rep, 64, self.size(2000))
@@ -279,34 +292,40 @@ class Dashboard(WireWorkload):
         return [self._client_loop(self._requests(c)) for c in range(self.clients)]
 
     def warmup(self) -> None:
-        kinds = iter(["aw", "win", "near", "raw", "meta", "meta", "meta"])
-        gen = self._requests(99, kinds)
-        self._run_clients([self._client_loop(gen)], 0, warm=True)
+        """The four clients' closed loops for a fixed number of requests
+        each, on request streams of their own; between them they send
+        every request kind."""
+        loops = []
+        for c in range(self.clients):
+            gen = self._requests(c, rng_key=900 + c)
+            loops.append(self._client_loop(_take(gen, self.WARMUP)))
+        self._run_clients(loops, 0, warm=True)
 
     def measure(self, seconds: float) -> None:
         self._run_clients(self.loops(), seconds, warm=False)
 
-    def _requests(self, client: int, kinds=None):
-        rng = np.random.default_rng([self.seed, 100 + client])
+    def _requests(self, client: int, rng_key=None):
+        rng = np.random.default_rng(
+            [self.seed, 100 + client if rng_key is None else rng_key]
+        )
         fleet, end = self.fleet, self.end_q
 
-        def cycle():
-            k = 5 * client
-            while True:
-                yield self.CYCLE[k % len(self.CYCLE)]
-                k += 1
+        def turns(xs):
+            k = client % len(xs)
+            return itertools.cycle(xs[k:] + xs[:k])
 
-        order = kinds if kinds is not None else cycle()
+        order = itertools.cycle(self.CYCLE[5 * client :] + self.CYCLE[: 5 * client])
         spans = itertools.cycle([DAY, WEEK])  # last day / last week, in turn
+        pws, depths = turns(list(range(36, 43))), turns(list(range(36, 42)))
+        widths, lengths = turns([16, 64, 256]), turns([500, 1000, 2000])
+        backs, metas = turns([False, True]), turns([0, 1, 2])
 
         def nxt(warm):
-            kind = next(order, None)
-            if kind is None:
-                return None
+            kind = next(order)
             s = fleet[rng.choice(len(fleet), p=self.pop)]
             times, q = s.times, s.q
             if kind == "aw":
-                pw = int(rng.integers(36, 43))
+                pw = next(pws)
                 start = end - next(spans)
                 want = oracle.aligned_windows(times, q, start, end, pw)
                 body = encode(
@@ -320,8 +339,8 @@ class Dashboard(WireWorkload):
 
                 return "stat", "AlignedWindows", body, check, None
             if kind == "win":
-                depth = int(rng.integers(36, 42))
-                width = (1 << 36) * int(rng.choice([16, 64, 256]))
+                depth = next(depths)
+                width = (1 << 36) * next(widths)
                 start = (end - next(spans)) >> 36 << 36
                 want = oracle.windows(times, q, start, end, width)
                 body = encode(
@@ -337,7 +356,7 @@ class Dashboard(WireWorkload):
                 return "stat", "Windows", body, check, None
             if kind == "near":
                 t = int(rng.integers(times[0] + 1, times[-1] + 1))
-                back = bool(rng.random() < 0.5)
+                back = next(backs)
                 i = oracle.nearest(times, t, back)
                 body = encode({"uuid": s.uuid, "time": t, "backward": back})
 
@@ -349,7 +368,7 @@ class Dashboard(WireWorkload):
 
                 return "point", "Nearest", body, check, None
             if kind == "raw":
-                c = min(len(times), int(rng.integers(1000, 10_001)))
+                c = min(len(times), next(lengths))
                 i = int(rng.integers(0, len(times) - c + 1))
                 start, stop = int(times[i]), int(times[i + c - 1]) + 1
                 body = encode({"uuid": s.uuid, "start": start, "end": stop})
@@ -365,12 +384,11 @@ class Dashboard(WireWorkload):
                     return c
 
                 return "point", "RawValues", body, check, None
-            return self._meta(rng, s)
+            return self._meta(next(metas), s)
 
         return nxt
 
-    def _meta(self, rng, s):
-        pick = rng.integers(3)
+    def _meta(self, pick: int, s):
         if pick == 0:
             body = encode({"uuid": s.uuid})
             want_tags = sorted(s.tags.items())
@@ -587,8 +605,8 @@ class Ingest(Workload):
     store, with ladder maintenance and a compaction after every batch."""
 
     classes = ("flush",)
-    STREAMS = 64
-    PER_FILE = 1000  # points per stream per file
+    STREAMS = 16
+    PER_FILE = 2000  # points per stream per file
 
     def setup(self, rep: int) -> None:
         from btrdb_server_spark.plans.rollup import RollupLadder
