@@ -277,8 +277,10 @@ class BTrDB:
         # aggregating the unioned raw+buffer points (merger.go:132-214's
         # weighted combine is exactly Spark's partial->final aggregation).
         if version is None and self.ladder is not None and not buffered:
+            # The store scan is planned only if the ladder falls back to raw
+            # points; a ladder-served request never reads the manifest for it.
             return self.ladder.serve_aligned(
-                self.store.stream_points(uuid), uuid, start, end, pw
+                lambda: self.store.stream_points(uuid), uuid, start, end, pw
             )
         pts = self.store.stream_points(uuid, version)
         if version is None:
@@ -320,7 +322,7 @@ class BTrDB:
         buffered = bool(self._buffers.get(uuid))
         if version is None and depth > 0 and self.ladder is not None and not buffered:
             return self.ladder.serve_windows(
-                self.store.stream_points(uuid), uuid, start, end, width, depth
+                lambda: self.store.stream_points(uuid), uuid, start, end, width, depth
             )
         pts = self.store.stream_points(uuid, version)
         if version is None:

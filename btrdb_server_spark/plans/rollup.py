@@ -35,7 +35,7 @@ Serving prunes on both partition columns before any row is read.
 from __future__ import annotations
 
 import os
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +50,13 @@ _ROLLUP_SCHEMA = (
     "uuid string, bucket long, vmin double, vsum double, vq long,"
     " vmax double, cnt long"
 )
+
+# On-disk level: the rollup columns under uuid_bucket=/chunk= partition
+# dirs. The schema is EXPLICIT on every read (the PointStore._READ_SCHEMA
+# stance): planning a serve or a fold never runs a footer-sampling job, and
+# a level directory holding no data files reads as empty instead of failing
+# schema inference.
+_LEVEL_SCHEMA = _ROLLUP_SCHEMA + ", uuid_bucket long, chunk long"
 
 # Canonical rollup columns, used by every select so the schema stays stable
 # across build / merge / serve paths. `vq` is the quantized integer value sum
@@ -123,6 +130,16 @@ def _rollup_mean(value_quantum: Optional[float]):
     return F.sum("vsum") / F.sum("cnt")
 
 
+PointsArg = Union[DataFrame, Callable[[], DataFrame]]
+
+
+def _resolve_points(points: PointsArg) -> DataFrame:
+    """Serve paths take the raw points as a DataFrame or as a zero-argument
+    callable building it: only the raw fallback needs the points, so a
+    ladder-served request never plans the store scan."""
+    return points() if callable(points) else points
+
+
 def stat_from_rollup(
     level: DataFrame,
     level_pw: int,
@@ -134,7 +151,14 @@ def stat_from_rollup(
 ) -> DataFrame:
     """Serve AlignedWindows(pw) from a rollup at level_pw <= pw: group the
     level's buckets up to the target width (qtree.go:925-947 — answer from
-    stored aggregates, fan-in <= 64**ceil((pw-level_pw)/6))."""
+    stored aggregates, fan-in <= 64**ceil((pw-level_pw)/6)).
+
+    The one stream's rows are coalesced into ONE partition, so the groupBy
+    and the orderBy need no exchange and no range-sampling job: building
+    the plan runs no Spark job and draining it runs one. That stays cheap
+    at any scale: the serving level is the coarsest one <= pw, so within
+    the ladder's range the single task reads fewer than 64 rollup rows per
+    output row, and output rows funnel through one driver socket anyway."""
     assert level_pw <= pw
     fstart = align_floor(start, pw)
     fend = align_floor(end, pw)
@@ -144,6 +168,7 @@ def stat_from_rollup(
             & (F.col("bucket") >= F.lit(fstart))
             & (F.col("bucket") < F.lit(fend))
         )
+        .coalesce(1)
         .groupBy(F.shiftleft(F.shiftright("bucket", pw), pw).alias("time"))
         .agg(
             F.min("vmin").alias("min"),
@@ -298,19 +323,39 @@ class RollupLadder:
     def _chunk_shift(self, pw: int) -> int:
         return max(pw + self.chunk_pw, self.min_chunk_shift)
 
+    def has_level(self, pw: int) -> bool:
+        """Whether level pw is materialized — a filesystem check; no
+        DataFrame is built."""
+        return os.path.isdir(self._level_path(pw))
+
+    def best_level(
+        self, max_pw: Optional[int] = None, fits: Optional[Callable[[int], bool]] = None
+    ) -> Optional[int]:
+        """The ladder's routing rule: the coarsest materialized level
+        <= max_pw (None = no bound) that also satisfies `fits`, or None
+        when no level qualifies (the caller falls back to raw points)."""
+        for pw in reversed(self.levels):
+            if (
+                (max_pw is None or pw <= max_pw)
+                and (fits is None or fits(pw))
+                and self.has_level(pw)
+            ):
+                return pw
+        return None
+
     def level(self, pw: int) -> Optional[DataFrame]:
         """Canonical rollup columns (partition columns dropped) — the
-        maintenance-path view."""
+        maintenance-path view; None when the level is not materialized."""
         df = self._level_raw(pw)
         return None if df is None else df.select(
             *ROLLUP_COLS
         )
 
     def _level_raw(self, pw: int) -> Optional[DataFrame]:
-        p = self._level_path(pw)
-        if not os.path.exists(p):
+        if not self.has_level(pw):
             return None
-        return self.spark.read.option("basePath", p).parquet(p)
+        p = self._level_path(pw)
+        return self.spark.read.schema(_LEVEL_SCHEMA).option("basePath", p).parquet(p)
 
     def _level_for_stream(
         self,
@@ -437,8 +482,7 @@ class RollupLadder:
             ).localCheckpoint(eager=True)
             if batch_id is not None and self.level_last_batch(pw) >= batch_id:
                 continue  # replay: this level already folded this batch
-            old = self.level(pw)
-            if old is None:
+            if not self.has_level(pw):
                 self._write_level(pw, delta)
             else:
                 pred = self._touched_pred(delta, pw)
@@ -469,7 +513,7 @@ class RollupLadder:
             .first()[0]
         )
         for pw in self.levels:
-            if self._level_raw(pw) is None:
+            if not self.has_level(pw):
                 continue
             lo = align_floor(start, pw)
             hi = align_floor(end - 1, pw) + (1 << pw)
@@ -525,21 +569,22 @@ class RollupLadder:
                 self._write_level(pw, merged, dynamic=True)
 
     def serve_aligned_all(
-        self, points: DataFrame, start: int, end: int, pw: int
+        self, points: PointsArg, start: int, end: int, pw: int
     ) -> DataFrame:
         """Fleet AlignedWindows for EVERY stream from the best materialized
         level <= pw: the 100 TB dashboard query — per-stream stats over a
         year — reads the hot rollup tier (chunk-range pruned), never raw
         points. Falls back to the raw fleet aggregation below the finest
         level."""
-        candidates = [l for l in self.levels if l <= pw and self.level(l) is not None]
-        if not candidates:
+        best = self.best_level(pw)
+        if best is None:
             from btrdb_server_spark.operators.stat import (
                 aligned_windows_all_streams,
             )
 
-            return aligned_windows_all_streams(points, start, end, pw)
-        best = max(candidates)
+            return aligned_windows_all_streams(
+                _resolve_points(points), start, end, pw
+            )
         fstart, fend = align_floor(start, pw), align_floor(end, pw)
         shift = self._chunk_shift(best)
         lvl = self._level_raw(best).where(
@@ -558,7 +603,7 @@ class RollupLadder:
         )
 
     def serve_windows(
-        self, points: DataFrame, uuid: str, start: int, end: int, width: int, depth: int
+        self, points: PointsArg, uuid: str, start: int, end: int, width: int, depth: int
     ) -> DataFrame:
         """Windows with depth-bounded descent served from the ladder: the
         best level <= depth already IS the 2**level pre-aggregation the
@@ -576,10 +621,9 @@ class RollupLadder:
             raise ValueError("window width must be positive")
         if not 0 <= depth <= 63:
             raise ValueError("window depth invalid")  # quasar.go:318
-        candidates = [l for l in self.levels if l <= depth and self.level(l) is not None]
-        if depth <= 0 or not candidates:
-            return windows(points, uuid, start, end, width, depth)
-        best = max(candidates)
+        best = self.best_level(depth) if depth > 0 else None
+        if best is None:
+            return windows(_resolve_points(points), uuid, start, end, width, depth)
         end = end - (end - start) % width
         n_windows = (end - start) // width
         lvl = self._level_for_stream(
@@ -590,7 +634,7 @@ class RollupLadder:
             # query start (it holds in-range points the raw operator counts).
             & (F.col("bucket") > F.lit(start - (1 << best)))
             & (F.col("bucket") < F.lit(end))
-        )
+        ).coalesce(1)  # one partition end to end: see stat_from_rollup
         mean_expr = _rollup_mean(self.value_quantum)
         agg = (
             lvl.withColumn(
@@ -614,9 +658,13 @@ class RollupLadder:
                 F.sum("cnt").alias("count"),
             )
         )
-        spine = self.spark.range(0, n_windows).select(F.col("id").alias("widx"))
+        spine = self.spark.range(0, n_windows, numPartitions=1).select(
+            F.col("id").alias("widx")
+        )
         return (
-            spine.join(agg, "widx", "left")
+            # Both sides are single-partition, so a hash join needs no
+            # exchange; a broadcast join would run a collect job of its own.
+            spine.join(agg.hint("shuffle_hash"), "widx", "left")
             .select(
                 (F.lit(start) + F.col("widx") * F.lit(width)).alias("time"),
                 "min",
@@ -628,14 +676,14 @@ class RollupLadder:
         )
 
     def serve_aligned(
-        self, points: DataFrame, uuid: str, start: int, end: int, pw: int
+        self, points: PointsArg, uuid: str, start: int, end: int, pw: int
     ) -> DataFrame:
         """AlignedWindows routed to the best materialized level <= pw; falls
         back to raw points when the query is finer than the finest level
-        (qtree.go:874-895 leaf read)."""
-        candidates = [l for l in self.levels if l <= pw and self.level(l) is not None]
-        if candidates:
-            best = max(candidates)
+        (qtree.go:874-895 leaf read). `points` is read only on that
+        fallback (see _resolve_points)."""
+        best = self.best_level(pw)
+        if best is not None:
             return stat_from_rollup(
                 self._level_for_stream(best, uuid, align_floor(start, pw), align_floor(end, pw)),
                 best,
@@ -647,4 +695,4 @@ class RollupLadder:
             )
         from btrdb_server_spark.operators.stat import aligned_windows
 
-        return aligned_windows(points, uuid, start, end, pw)
+        return aligned_windows(_resolve_points(points), uuid, start, end, pw)

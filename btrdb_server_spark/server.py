@@ -20,8 +20,8 @@ this package can still drive every operation:
   `toLocalIterator` — the driver holds at most a few partitions, so a
   result far bigger than driver memory (or maxResultSize) streams
   through, like the reference's bounded 5000-point channel
-  (serve.go:141-179). The request lock covers planning and the first
-  page only, never the client drain.
+  (serve.go:141-179). The request lock (below) covers planning and the
+  first page only, never the client drain.
 - Every response carries `stat`: {"code": 0, "msg": ""} on success, a
   bte/errors.go-mirrored code (constants.py:53-65) on failure — errors
   are a payload, not an HTTP 5xx, matching gRPC semantics.
@@ -33,10 +33,21 @@ Scale stance: this is a CONTROL-PLANE door, not the data plane. Results
 stream through the driver by design (the reference's gRPC responses do
 too — serve.go pages qtree results through one goroutine); bulk analytics
 belong on the embedded DataFrame API / SQL surface, where results never
-leave the cluster. Requests are serialized with a coarse lock: the
-parallelism lives INSIDE each Spark job, and facade mutations (write
-buffer, registry CAS) are not concurrency-safe per stream — the reference
-holds per-stream mutexes for the same reason (pqm.go).
+leave the cluster.
+
+Concurrency: a writer-preferring reader/writer lock. The read RPCs in
+READ_RPCS share it, so their planning and Spark jobs overlap — the
+reference likewise admits reads concurrently through its ConcurrentOp
+pool and serializes only writes (serve.go:126, blockstore.go:283-320).
+Shared reads are safe because a read path touches only atomically
+replaced manifest snapshots, immutable planned scans (files a generation
+never rewrites in place) and the registry's lazily built DataFrame (two
+racing builders build the same plan). Every other RPC — and any RPC added
+later — takes the lock exclusively: facade mutations (write buffer,
+registry CAS, ladder fold) are not concurrency-safe per stream, which is
+why the reference holds per-stream mutexes for them (pqm.go). A waiting
+writer blocks newly arriving readers, so a steady read load cannot starve
+writes.
 
 FaultInject mirrors the reference's default-disabled behavior
 (serve.go:797-822 requires BTRDB_ENABLE_FAULT_INJECT): it answers an
@@ -46,10 +57,11 @@ there is nothing to corrupt on purpose in a test build.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Optional
+from typing import Iterator, Optional
 
 from btrdb_server_spark.constants import ERR_NO_SUCH_POINT
 from btrdb_server_spark.store import BTrDBError
@@ -61,6 +73,67 @@ RANGE_BATCH = 1000
 LOOKUP_BATCH = 200
 
 _OK = {"code": 0, "msg": ""}
+
+# RPCs that only read engine state and may run concurrently; every other
+# RPC runs exclusively (see the module docstring).
+READ_RPCS = frozenset({
+    "RawValues", "AlignedWindows", "Windows", "ArrowRawValues",
+    "ArrowAlignedWindows", "Nearest", "Changes", "StreamInfo",
+    "LookupStreams", "ListCollections", "GetMetadataUsage", "Info",
+    "GenerateCSV",
+})
+WRITE_RPCS = frozenset({
+    "Create", "SetStreamAnnotations", "Insert", "Delete", "Flush",
+    "Obliterate", "FaultInject",
+})
+
+
+class RWLock:
+    """Writer-preferring reader/writer lock: any number of readers share
+    it, a writer holds it alone, and once a writer is waiting no new reader
+    enters — so writers cannot starve behind a steady stream of reads."""
+
+    def __init__(self):
+        self._cond = threading.Condition()
+        self._readers = 0
+        self._writing = False
+        self._writers_waiting = 0
+
+    @contextlib.contextmanager
+    def shared(self) -> Iterator[None]:
+        with self._cond:
+            while self._writing or self._writers_waiting:
+                self._cond.wait()
+            self._readers += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._readers -= 1
+                if not self._readers:
+                    self._cond.notify_all()
+
+    @contextlib.contextmanager
+    def exclusive(self) -> Iterator[None]:
+        with self._cond:
+            self._writers_waiting += 1
+            try:
+                while self._writing or self._readers:
+                    self._cond.wait()
+            except BaseException:
+                # a writer that gives up waiting must release the readers
+                # it was holding back
+                self._writers_waiting -= 1
+                self._cond.notify_all()
+                raise
+            self._writers_waiting -= 1
+            self._writing = True
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._writing = False
+                self._cond.notify_all()
 
 
 class _PreEncoded(str):
@@ -111,7 +184,7 @@ class BTrDBHttpServer:
     def __init__(self, db, host: str = "127.0.0.1", port: int = 0,
                  enable_fault_inject: bool = False):
         self.db = db
-        self._lock = threading.Lock()
+        self._lock = RWLock()
         self._enable_fault_inject = enable_fault_inject
         outer = self
 
@@ -159,8 +232,9 @@ class BTrDBHttpServer:
         except json.JSONDecodeError:
             h.send_error(400, "body must be JSON")
             return
-        # The lock covers the RPC call and — for streaming RPCs — only the
-        # LAUNCH of the result iteration (planning, facade/version reads,
+        # Read RPCs share the lock, all others hold it exclusively (module
+        # docstring). It covers the RPC call and — for streaming RPCs — only
+        # the LAUNCH of the result iteration (planning, facade/version reads,
         # the first page), never the client drain: results page out via
         # toLocalIterator AFTER the lock is released, so (a) a slow client
         # cannot wedge the server and (b) a result bigger than driver
@@ -173,7 +247,8 @@ class BTrDBHttpServer:
         # is the wire contract, and a TypeError from a wrong-typed JSON
         # field must not reset the connection.
         stream = first = None
-        with self._lock:
+        lock = self._lock.shared if method in READ_RPCS else self._lock.exclusive
+        with lock():
             try:
                 out = fn(req)
                 if hasattr(out, "__next__"):  # streaming RPC -> ndjson

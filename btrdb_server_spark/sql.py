@@ -80,9 +80,8 @@ def register_views(
 
     if db.ladder is not None:
         for pw in db.ladder.levels:
-            lvl = db.ladder.level(pw)
-            if lvl is not None:
-                lvl.createOrReplaceTempView(f"{prefix}_rollup_pw{pw}")
+            if db.ladder.has_level(pw):
+                db.ladder.level(pw).createOrReplaceTempView(f"{prefix}_rollup_pw{pw}")
                 names.append(f"{prefix}_rollup_pw{pw}")
 
     # The rewrite in sql() is exact only while the ladder (latest committed)

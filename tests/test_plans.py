@@ -109,6 +109,57 @@ def test_rollup_serve_prunes_to_one_shard(spark):
     assert "chunk" in filters
 
 
+def test_ladder_served_stat_job_counts(spark, tmp_path):
+    """A ladder-served single-stream stat read is planned without running
+    any Spark job (level routing is a filesystem check, level scans carry
+    an explicit schema, the raw store scan is never built) and drains in
+    ONE job: the stream's rollup rows sit in one partition, so the
+    groupBy, the window spine join and the orderBy need no exchange and no
+    range-sampling job."""
+    import uuid
+
+    from btrdb_server_spark.api import BTrDB
+
+    db = BTrDB(
+        spark, str(tmp_path / "jobs"), rollup_levels=[4, 10, 16], rollup_quantum=0.01
+    )
+    pts = [(t, (t % 97) / 100) for t in range(0, 60_000, 7)]
+    db.insert("s", pts[:4_000])
+    db.insert("s", pts[4_000:])
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs(fn):
+        group = f"ladder-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        bus.waitUntilEmpty()  # job events reach the status tracker async
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    aw, n = jobs(lambda: db.aligned_windows("s", 0, 49_152, 12))
+    assert n == 0
+    rows, n = jobs(aw.collect)
+    assert n == 1
+    w, n = jobs(lambda: db.windows("s", 100, 50_000, 3_000, depth=12))
+    assert n == 0
+    wrows, n = jobs(w.collect)
+    assert n == 1 and len(wrows) == (50_000 - 100) // 3_000
+
+    # the served answer is the raw aggregation's (exact min/max/count)
+    want = {}
+    for t, v in pts:
+        if t < 49_152:
+            want.setdefault(t >> 12 << 12, []).append(v)
+    assert [r.time for r in rows] == sorted(want)
+    for r in rows:
+        vals = want[r.time]
+        assert (r["min"], r["max"], r["count"]) == (min(vals), max(vals), len(vals))
+        assert abs(r["mean"] - sum(vals) / len(vals)) < 1e-9
+
+
 def test_window_spine_join_broadcasts(spark):
     """Windows hole emission joins the aggregate against a generated spine;
     neither side may shuffle the points table a second time."""

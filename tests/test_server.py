@@ -20,7 +20,12 @@ from btrdb_server_spark.constants import (
     ERR_INVALID_POINT_WIDTH,
     ERR_NO_SUCH_POINT,
 )
-from btrdb_server_spark.server import BTrDBHttpServer
+from btrdb_server_spark.server import (
+    READ_RPCS,
+    WRITE_RPCS,
+    BTrDBHttpServer,
+    RWLock,
+)
 
 
 @pytest.fixture(scope="module")
@@ -211,6 +216,85 @@ def test_wire_concurrent_requests_are_serialized_safely(srv):
         vals = results[i]
         assert len(vals) == 12
         assert all(v["value"] == float(i) for v in vals)
+
+
+def test_every_rpc_is_classified_read_or_write():
+    """Each rpc_* method is named in exactly one of READ_RPCS (shared lock)
+    and WRITE_RPCS (exclusive), so a new RPC has to be classified on
+    purpose — a write RPC cannot slip into the shared set unnoticed."""
+    rpcs = {a[len("rpc_"):] for a in dir(BTrDBHttpServer) if a.startswith("rpc_")}
+    assert not READ_RPCS & WRITE_RPCS
+    assert READ_RPCS | WRITE_RPCS == rpcs
+
+
+def test_wire_read_rpcs_share_the_lock(srv, monkeypatch):
+    """Two read RPCs are inside the request lock at the same time: each
+    waits on a 2-party barrier, which only trips if both got in. Were reads
+    serialized, the first would time out and answer a coded 500."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=60)
+    real = srv.rpc_Info
+
+    def meeting(req):
+        barrier.wait()
+        return real(req)
+
+    monkeypatch.setattr(srv, "rpc_Info", meeting)
+    out = [None, None]
+
+    def client(i: int) -> None:
+        out[i] = call(srv, "Info", {})
+
+    threads = [threading.Thread(target=client, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert [o["stat"]["code"] for o in out] == [0, 0], out
+
+
+def test_rwlock_waiting_writer_blocks_new_readers():
+    """Writer preference: while a reader holds the lock and a writer waits,
+    a newly arriving reader queues behind the writer instead of joining the
+    current reader — a steady read load cannot starve writes."""
+    import threading
+    import time
+
+    lock = RWLock()
+    order = []
+    a_in, a_release = threading.Event(), threading.Event()
+
+    def reader_a():
+        with lock.shared():
+            a_in.set()
+            a_release.wait(60)
+
+    def writer():
+        with lock.exclusive():
+            order.append("writer")
+
+    def reader_b():
+        with lock.shared():
+            order.append("reader")
+
+    ta = threading.Thread(target=reader_a)
+    ta.start()
+    assert a_in.wait(60)
+    tw = threading.Thread(target=writer)
+    tw.start()
+    deadline = time.monotonic() + 60
+    while not lock._writers_waiting:  # the writer is now queued
+        assert time.monotonic() < deadline
+        time.sleep(0.005)
+    tb = threading.Thread(target=reader_b)
+    tb.start()
+    tb.join(0.5)
+    assert tb.is_alive() and order == []  # B waits although only readers hold it
+    a_release.set()
+    for t in (ta, tw, tb):
+        t.join(60)
+    assert order == ["writer", "reader"]
 
 
 def test_wire_streams_pages_without_driver_materialization(srv, monkeypatch):
